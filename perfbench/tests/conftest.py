@@ -1,0 +1,9 @@
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.dirname(HERE)
+ROOT = os.path.dirname(BENCH)
+
+# the benchmark's modules import each other by bare name, as run.py does
+sys.path[:0] = [BENCH, ROOT]
